@@ -394,11 +394,12 @@ class LakeTable:
         # and couldn't grow past num_buckets on snapshots. Bucket
         # boundaries stay exact: the writer splits files by the
         # partitionBy value, and a bucket's rows hash to one partition.
-        # ``prepartitioned`` callers (apply_batch's AQE path) already
-        # partitioned the rows by (bucket, salt) BEFORE the chunking
-        # UDF, so the payload is not exchanged a second time here —
-        # each bucket then spans at most salt_buckets partitions, i.e.
-        # at most that many (advisory-sized) files per batch.
+        # ``prepartitioned`` rows (append_delta: apply_batch's
+        # salted_repartition) are already partitioned by (bucket, salt)
+        # BEFORE the chunking UDF, so the payload is not exchanged a
+        # second time here — each bucket then spans at most
+        # SALT_BUCKETS partitions, i.e. at most that many
+        # (advisory-sized) files per batch.
         if not prepartitioned:
             out = out.repartition("__bucket")
         out.sortWithinPartitions(
@@ -449,13 +450,16 @@ class LakeTable:
         batch_id: str,
         stats: dict | None = None,
         stats_fn=None,
-        prepartitioned: bool = False,
     ) -> dict:
         """MERGE commit: append the batch's upserts + tombstones as new
         delta files; compact any bucket whose file count exceeds the
         threshold. Write volume: O(batch) + amortized compaction.
         ``touched_buckets=None`` derives the touched set from the files
         the write actually produced (saves a pre-pass over the batch).
+        ``delta_rows`` are written in their own partitioning, with no
+        bucket exchange: apply_batch hands them over already partitioned
+        by (bucket, salt). Rows partitioned otherwise are still written
+        correctly, with up to one file per bucket per input partition.
 
         ``stats_fn``: optional ``callable(touched_buckets, new_files)
         -> dict`` invoked right after the delta files land and BEFORE
@@ -467,7 +471,7 @@ class LakeTable:
         seq = (prev["commit_seq"] + 1) if prev else 0
         files = {k: list(v) for k, v in (prev["files"] if prev else {}).items()}
 
-        new_files = self._write_snap(delta_rows, seq, "delta", prepartitioned=prepartitioned)
+        new_files = self._write_snap(delta_rows, seq, "delta", prepartitioned=True)
         if touched_buckets is None:
             touched_buckets = sorted(int(b) for b in new_files)
         if stats_fn is not None:

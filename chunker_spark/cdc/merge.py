@@ -10,15 +10,13 @@ scale:
    Spark plans this as partial→final hash aggregation (map-side combine
    absorbs hot keys before the shuffle, which is the scalable answer to
    monorepo skew for aggregation).
-4. **Salted repartition + manifest UDF** — ``salt = xxhash64(commit)
-   pmod S`` spreads a hot (repo,path) key over S partitions for the
-   CPU-heavy chunking stage (AQE cannot split a hot key inside a UDF
-   stage; mandated by BASELINE.json north_rule). The default path
-   partitions by (BUCKET, salt) with AQE sizing, which both spreads
-   hot keys and already satisfies the write layout — the batch payload
-   crosses exactly ONE exchange per commit; an explicit
-   ``udf_partitions`` keeps the classic
-   ``repartition(P, repo, path, salt)`` + write-side bucket exchange.
+4. **Salted repartition + manifest UDF** — one exchange by (BUCKET,
+   salt), ``salt = xxhash64(commit) pmod S``: the salt spreads a hot
+   key over S partitions for the CPU-heavy chunking stage (AQE cannot
+   split a hot key inside a UDF stage; mandated by BASELINE.json
+   north_rule), and the bucket already satisfies the write layout, so
+   the batch payload crosses exactly ONE exchange per commit. AQE
+   sizes it from the batch's bytes.
 5. **Merge-on-read delta commit** — the batch's upserts + tombstones
    append as new bucket-partitioned files (O(batch) write volume);
    readers resolve last-writer-wins per key and compaction keeps
@@ -94,24 +92,25 @@ def last_writer_wins(events: DataFrame, broadcast_winners: bool = True) -> DataF
     )
 
 
-def salted_repartition(
-    df: DataFrame, partitions: int | None = None, salt_buckets: int = 8
-) -> DataFrame:
-    """Spread hot (repo, path) keys across ``salt_buckets`` partitions
-    for the chunking stage; salt is derived from ``commit`` so replays
-    place rows identically.
+#: salt values per bucket on the commit exchange: bounds a hot bucket's
+#: fan-out for the chunking stage and the delta files per bucket.
+SALT_BUCKETS = 8
 
-    ``partitions=None`` (default) omits the explicit partition count so
+
+def salted_repartition(df: DataFrame, num_buckets: int) -> DataFrame:
+    """Partition by (bucket, salt) — a commit's one payload exchange.
+
+    The salt is derived from ``commit`` so replays place rows
+    identically; it spreads a hot bucket over ``SALT_BUCKETS``
+    partitions for the chunking stage. The bucket term already
+    satisfies the lake's write layout, so ``append_delta`` writes the
+    rows without exchanging them again. No explicit partition count:
     AQE sizes the exchange from the batch's actual bytes (guide §2:
-    scale-adaptive partitioning, not a constant tuned to one cluster) —
-    a small micro-batch coalesces to a handful of UDF tasks instead of
-    paying ``defaultParallelism`` Arrow round-trips, while a large batch
-    still fans out to advisory-sized partitions. Pass an explicit count
-    to pin the layout (tests, ingest-bench parallelism sweeps)."""
-    salt = F.pmod(F.xxhash64(F.coalesce(F.col("commit"), F.lit(""))), F.lit(salt_buckets))
-    if partitions is None:
-        return df.repartition(F.col("repo"), F.col("path"), salt)
-    return df.repartition(partitions, F.col("repo"), F.col("path"), salt)
+    scale-adaptive partitioning), so a micro-batch coalesces to a
+    handful of UDF tasks and a snapshot-scale batch fans out to at most
+    ``SALT_BUCKETS`` advisory-sized files per bucket."""
+    salt = F.pmod(F.xxhash64(F.coalesce(F.col("commit"), F.lit(""))), F.lit(SALT_BUCKETS))
+    return df.repartition(bucket_expr(num_buckets), salt)
 
 
 def apply_batch(
@@ -119,7 +118,6 @@ def apply_batch(
     raw_events: DataFrame,
     batch_id: str | int,
     params: ChunkerParams = SOURCE_PARAMS,
-    udf_partitions: int | None = None,
     collect_metrics: bool = True,
     broadcast_threshold: int = BROADCAST_THRESHOLD_ROWS,
 ) -> dict | None:
@@ -163,19 +161,11 @@ def apply_batch(
     # passes — the hot path is a single write action and caching it
     # would serialize every row into the memory store for nothing.
     #
-    # Partitioning (guide §2.4 — one exchange, not two): the default
-    # AQE path repartitions by (BUCKET, salt) before the chunking UDF,
-    # which spreads a hot (repo, path) key over the salt values exactly
-    # like the key-level salt did AND already satisfies the write
-    # layout — _write_snap skips its own bucket repartition, so the
-    # batch payload crosses ONE exchange per commit instead of two.
-    # AQE sizes the exchange, so a micro-batch coalesces to one
-    # advisory-sized partition (one file per bucket, the former
-    # layout) while a snapshot-scale batch fans out to at most
-    # salt_buckets files per bucket, each advisory-sized. An explicit
-    # ``udf_partitions`` (ingest-bench parallelism sweeps) keeps the
-    # former two-exchange pipeline so its file layout and ladder
-    # comparability are unchanged.
+    # Partitioning (guide §2.4 — one exchange, not two): the rows are
+    # repartitioned by (BUCKET, salt) before the chunking UDF, which
+    # spreads a hot key over the salt values AND already satisfies the
+    # write layout, so the batch payload crosses ONE exchange per
+    # commit (salted_repartition).
     # (No cache anywhere: the metrics path reads the just-written delta
     # files for its reuse join instead of pinning the batch in memory —
     # caching would also block AQE from re-coalescing the fused
@@ -183,15 +173,7 @@ def apply_batch(
     # 20-row batch into one tiny file per (bucket, salt) group when
     # tried.)
     winners = last_writer_wins(events, broadcast_winners=use_broadcast)
-    if udf_partitions is None:
-        salt = F.pmod(
-            F.xxhash64(F.coalesce(F.col("commit"), F.lit(""))), F.lit(8)
-        )
-        spread = winners.repartition(bucket_expr(lake.num_buckets), salt)
-        prepartitioned = True
-    else:
-        spread = salted_repartition(winners, udf_partitions)
-        prepartitioned = False
+    spread = salted_repartition(winners, lake.num_buckets)
     batch = with_manifest(spread, params=params)
     # merge-on-read delta: upserts keep their seq; deletes become
     # tombstones. No table read, no join — the MERGE "match" is
@@ -291,8 +273,7 @@ def apply_batch(
             return stats
 
         commit = lake.append_delta(
-            delta, None, str(batch_id), stats_fn=_finish_stats,
-            prepartitioned=prepartitioned,
+            delta, None, str(batch_id), stats_fn=_finish_stats
         )
     else:
         # hot path: ONE Spark action per batch — the delta write;
@@ -300,7 +281,6 @@ def apply_batch(
         commit = lake.append_delta(
             delta, None, str(batch_id),
             stats={"lww_strategy": "broadcast" if use_broadcast else "shuffle"},
-            prepartitioned=prepartitioned,
         )
     return commit
 

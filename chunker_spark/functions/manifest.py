@@ -4,10 +4,12 @@
 bit-for-bit vs /root/reference/src/chunker/package.d golden vectors) to a
 Spark column: ``content -> array<struct<offset,length,cut,chunk_sha256>>``.
 It is an Arrow-vectorized scalar pandas UDF — data crosses the JVM↔Python
-boundary once per Arrow batch, and the per-row kernel is numpy, never
-per-byte Python.  Lookup tables are built once per executor interpreter
-(lru_cache in kernel.vectorized), mirroring the reference's global table
-cache (rabin.d:52-56).
+boundary once per Arrow batch, and the whole batch is chunked by
+``kernel.chunk_many``: the bundled C provider (kernel/native.py) when it
+compiles and passes its self-check, else numpy — never per-byte Python.
+Lookup tables are built once per executor interpreter (lru_cache in
+kernel.vectorized), mirroring the reference's global table cache
+(rabin.d:52-56).
 
 Everything else (sha256 invariant, sizes, chunk-store aggregation) stays
 JVM-side in built-in functions so Catalyst can push/prune/codegen it.
@@ -33,7 +35,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel.chunker import ChunkerParams
-from ..kernel.vectorized import chunk_buffer, chunk_many
+from ..kernel.vectorized import chunk_many
 
 #: Spark-side manifest element type. ``cut`` is always < 2^53 (degree-53
 #: modulus, rabin.d:118-127) so LongType holds it without sign issues.
@@ -46,13 +48,6 @@ CHUNK_TYPE = StructType(
     ]
 )
 MANIFEST_TYPE = ArrayType(CHUNK_TYPE, False)
-
-
-def _manifest_of(content: bytes | str | None, params: ChunkerParams) -> list | None:
-    if content is None:
-        return None
-    data = content.encode("utf-8") if isinstance(content, str) else bytes(content)
-    return _rows(data, chunk_buffer(data, params))
 
 
 def _rows(data: bytes, chunks) -> list:

@@ -17,12 +17,8 @@ Concurrency: Spark Python workers are separate processes that may import
 simultaneously; each compiles to a private temp name and atomically
 ``os.replace``-renames onto the shared content-addressed path, so races
 are benign. On a multi-node cluster every node compiles once (the .so is
-keyed by source hash, not host) — or ship a prebuilt ``chunker_native``
-module, which ``native.provider()`` prefers.
-
-Kill-switch: ``CHUNKER_NATIVE=0`` (checked in native.py) keeps the numpy
-path — used by ladder benchmarks that must stay comparable with samples
-collected before this provider existed.
+keyed by source hash, not host); a prebuilt provider can be injected with
+``native.set_provider``.
 """
 
 from __future__ import annotations

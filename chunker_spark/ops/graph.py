@@ -31,7 +31,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    stats_out: list | None = None,
 ) -> DataFrame:
     """Edges (undirected, any orientation, duplicates fine) ->
     (node, component) where component is the minimum node id reachable.
@@ -40,12 +39,9 @@ def connected_components(
     edges) don't appear — union the full id set afterwards if every
     row needs a label.
 
-    ``stats_out``: optional list; one dict per round is appended with
-    {round, changed, seconds} plus a final summary {sym_edges, nodes}
-    — the scale-probe instrumentation (per-round shuffle volume is
-    sym_edges + 2·nodes fixed-width rows: the neighbor join and the
-    jump join; the convergence check is a filter+count over the
-    round's checkpointed labels, shuffle-free).
+    Per-round shuffle volume is sym_edges + 2·nodes fixed-width rows
+    (the neighbor join and the jump join); the convergence check is a
+    filter+count over the round's checkpointed labels, shuffle-free.
     """
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -69,15 +65,8 @@ def connected_components(
         .agg(F.min("b").alias("mn"))
         .select(F.col("a").alias("node"), F.least("a", "mn").alias("comp"))
     ).localCheckpoint(eager=True)
-    if stats_out is not None:
-        stats_out.append(
-            {"sym_edges": edges_cur.count(), "nodes": labels.count()}
-        )
 
-    import time as _time
-
-    for it in range(max_iter):
-        t0 = _time.monotonic()
+    for _ in range(max_iter):
         # neighbor pass: min label among my neighbors
         with_nbr = (
             edges_cur.join(labels.withColumnRenamed("node", "b"), "b")
@@ -108,10 +97,6 @@ def connected_components(
         ).localCheckpoint(eager=False)
         changed = stepped.where(F.col("comp") != F.col("prev")).count()
         labels = stepped.select("node", "comp")
-        if stats_out is not None:
-            stats_out.append(
-                {"round": it, "changed": changed, "seconds": round(_time.monotonic() - t0, 3)}
-            )
         if changed == 0:
             break
     else:

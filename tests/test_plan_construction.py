@@ -46,6 +46,18 @@ def test_kmeans_assign_sql_equals_column_construction(spark):
     assert new.exceptAll(old).count() == 0 and old.exceptAll(new).count() == 0
 
 
+def test_kmeans_assign_rejects_dotted_vec_col(spark):
+    """The SQL string path has no Column fallback: a struct path must
+    raise instead of being quoted into one (wrong) column name."""
+    from chunker_spark.ops.clustering import kmeans_assign
+
+    df = spark.createDataFrame(
+        [(0, ([1.0, 0.0],))], "vec_id long, s struct<embedding: array<double>>"
+    )
+    with pytest.raises(ValueError, match="s.embedding"):
+        kmeans_assign(df, [(0, [1.0, 0.0])], vec_col="s.embedding")
+
+
 # ---- simhash: SQL fast path vs Column path ---------------------------
 
 def test_simhash_sql_fast_path_equals_column_path(spark):
@@ -65,6 +77,36 @@ def test_simhash_sql_fast_path_equals_column_path(spark):
     ).collect()
     for r in both:
         assert r["h_sql"] == r["h_col"], r
+
+
+def test_simhash_dotted_name_reaches_struct_field(spark):
+    """A dotted name is not an identifier, so it takes the Column path
+    and resolves ``s.text`` as a struct field, hashing like the flat
+    column does."""
+    from chunker_spark.ops.dedup import simhash_expr
+
+    rows = [(0, "The quick brown fox", ("The quick brown fox",)), (1, "", ("",))]
+    df = spark.createDataFrame(rows, "doc_id long, text string, s struct<text: string>")
+    for r in df.select(
+        simhash_expr("text").alias("flat"), simhash_expr("s.text").alias("nested")
+    ).collect():
+        assert r["flat"] == r["nested"], r
+
+
+# ---- call-site capture switch: a private PySpark attribute -----------
+
+def test_debugging_cache_patch_still_reaches_pyspark():
+    """__spark_entry__ turns call-site capture off by setting the private
+    ``pyspark.errors.utils._enable_debugging_cache``. Assigning a renamed
+    attribute would succeed silently and lose the plan-build saving, so
+    pin that PySpark's reader still consults that exact global."""
+    import pyspark.errors.utils as peu
+
+    assert "_enable_debugging_cache" in peu.is_debugging_enabled.__code__.co_names
+    import __spark_entry__  # noqa: F401
+
+    assert peu._enable_debugging_cache is False
+    assert peu.is_debugging_enabled() is False
 
 
 # ---- normalize_events: precompiled SQL vs canonical_field ------------

@@ -155,26 +155,76 @@ def test_minhash_band_join_is_fixed_width_and_sig_reused(spark):
     assert "ArrowEvalPython" not in plan  # signature UDF ran once, pre-plan
 
 
-def test_salted_repartition_spreads_monorepo_keys(spark):
+def test_commit_exchange_spreads_monorepo_keys(spark):
     """Monorepo skew: a batch whose keys all live in one repo must still
-    spread across partitions for the chunking stage (north_rule salted
-    repartition) — no partition holds more than a small multiple of the
-    mean."""
+    spread across partitions on the (bucket, salt) exchange apply_batch
+    runs before the chunking stage (north_rule salted repartition) — no
+    partition holds more than a small multiple of the mean. Coalescing
+    is off so the test sees the exchange's own layout, as at scale."""
     from chunker_spark.cdc.merge import salted_repartition
 
     rows = [("repo-0", f"src/f{i}.py", f"c{i}") for i in range(2000)]
     df = spark.createDataFrame(rows, "repo string, path string, commit string")
     parts = 16
-    sizes = (
-        salted_repartition(df, parts)
-        .rdd.glom()
-        .map(len)
-        .collect()
-    )
+    confs = {
+        "spark.sql.shuffle.partitions": str(parts),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        sizes = salted_repartition(df, num_buckets=16).rdd.glom().map(len).collect()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
     assert len(sizes) == parts
     nonempty = [s for s in sizes if s]
     assert len(nonempty) >= parts // 2  # most partitions carry work
     assert max(sizes) <= 3 * (2000 / parts)  # no hot partition
+
+
+@pytest.mark.parametrize("collect_metrics", [False, True])
+def test_delta_write_has_one_payload_exchange(spark, tmp_path, monkeypatch, collect_metrics):
+    """The frame apply_batch writes moves the batch payload through
+    exactly ONE hash exchange — the (bucket, salt) repartition before
+    the chunking UDF; the write adds none and the LWW winners exchange
+    carries keys only. A payload exchange is one whose input holds
+    ``content``."""
+    import pandas as pd
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from chunker_spark.cdc import EVENT_SCHEMA, GenSpec, LakeTable, apply_batch, gen_events_local
+    from chunker_spark.kernel import ChunkerParams
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        if "-delta" in path:
+            written.append(_plan(self._df))
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    params = ChunkerParams(average_bits=9, min_size=256, max_size=4096)
+    events = list(gen_events_local(GenSpec(seed=3, n_keys=20, mean_blocks=2), 60))
+    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4)
+    pdf = pd.DataFrame(events)[[f.name for f in EVENT_SCHEMA.fields]]
+    apply_batch(
+        lake, spark.createDataFrame(pdf, EVENT_SCHEMA), "b0",
+        params=params, collect_metrics=collect_metrics,
+    )
+    assert len(written) == 1
+    # formatted plans list one detail block per node: "(n) Name",
+    # then "Input [k]: [...]" and "Arguments: ..." lines
+    blocks = re.split(r"\n(?=\(\d+\) )", written[0])
+    hash_exchanges = [
+        b for b in blocks
+        if re.match(r"\(\d+\) Exchange\b", b) and "hashpartitioning(" in b
+    ]
+    payload = [b for b in hash_exchanges if re.search(r"Input \[\d+\]: \[[^\]]*\bcontent#", b)]
+    assert len(payload) == 1, written[0]
+    assert "xxhash64(coalesce(commit#" in payload[0]  # the salted exchange
 
 
 def test_semi_join_pushes_returnflag_filter(spark):
