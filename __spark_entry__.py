@@ -42,27 +42,31 @@ from pyspark.sql.window import Window
 
 # Engine-wide: turn OFF PySpark's DataFrame-debugging call-site capture
 # (spark.python.sql.dataFrameDebugging.enabled, default true). With it
-# on, EVERY DataFrame/Column API call pays ~3-4 py4j round trips (an
+# on, EVERY Column method call pays ~3-4 py4j round trips (an
 # active-session lookup, a conf.get of stackTracesInDataFrameContext, a
 # JVM PySparkCurrentOrigin.set) plus a Python stack walk — pure
 # driver-side control-plane cost that error messages spend on a user
-# code line pointer. Measured on this suite: 40-55% of plan-
-# construction time per query (e.g. simhash build 0.61->0.27 s,
-# wal2json_parse 0.25->0.13 s, same-process interleaved A/B); the suite
-# builds ~100 query plans per bench pass, and a streaming deployment
-# re-builds its micro-batch plan every trigger. The conf is read ONCE
-# per process and cached (pyspark.errors.utils._enable_debugging_cache)
-# — possibly before this module can reach a session (bench.py warms
-# the session before calling queries()), so the supported conf route
-# cannot win the race; setting the module cache directly IS the switch.
-# Results are unaffected: the flag only enriches error messages.
+# code line pointer. Measured on a 4-core host at local[4] (median of
+# 40 same-process interleaved builds): a canal parser plan
+# (split_malformed + parse_canal) builds in 65 ms with capture off
+# against 121 ms with it on, a simhash Column expression in 80 ms
+# against 160 ms; the suite builds ~100 query plans per pass, and a
+# streaming deployment re-builds its micro-batch plan every trigger.
+# The conf is read ONCE per process and cached
+# (pyspark.errors.utils._enable_debugging_cache) — possibly before
+# this module can reach a session (bench.py warms the session before
+# calling queries()), so the supported conf route cannot win the race;
+# setting the module cache directly IS the switch. Results are
+# unaffected: the flag only enriches error messages.
 _pyspark_errors_utils._enable_debugging_cache = False
 
 
 #: per-process parquet schema cache — METADATA only, a metastore in
 #: miniature. Every bare spark.read.parquet runs a one-task
-#: footer/schema-inference job (~0.1 s warm, measured); the suite
-#: re-reads the same few dozen fixed paths 100+ times per bench pass.
+#: footer/schema-inference job: on a 4-core host at local[4] a warm
+#: read of the sf0.01 documents table builds in 86-93 ms without the
+#: cached schema against 14-15 ms with it (median of 40); the suite
+#: re-reads the same few dozen fixed paths 100+ times per pass.
 #: The schema is inferred once per path and passed explicitly on later
 #: reads — plan-identical (the cached schema IS the inferred one), and
 #: no data or results are ever cached: every read still scans parquet.
@@ -779,21 +783,12 @@ def q_simhash(spark, sf):
     reversed_text = F.concat_ws(" ", F.reverse(words))
     # two-step projection so the base hash is evaluated ONCE (it
     # appears in both invariant comparisons — inlined it would run 4
-    # simhash evaluations per doc instead of 3). The text variants are
-    # pre-projected to named columns so all three simhash_expr calls
-    # take the single-py4j-call SQL fast path; the optimizer collapses
-    # the adjacent projections, so the executed plan is unchanged.
-    pre = d.select(
-        "doc_id",
-        "text",
-        reversed_text.alias("_rev"),
-        F.upper(F.col("text")).alias("_up"),
-    )
-    h = pre.select(
+    # simhash evaluations per doc instead of 3).
+    h = d.select(
         "doc_id",
         simhash_expr("text").alias("h_base"),
-        simhash_expr("_rev").alias("h_rev"),
-        simhash_expr("_up").alias("h_up"),
+        simhash_expr(reversed_text).alias("h_rev"),
+        simhash_expr(F.upper(F.col("text"))).alias("h_up"),
     )
     return h.select(
         "doc_id",

@@ -4,17 +4,19 @@ Env:
   SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS    local[] cores (default 32)
 
-Prints the full record (cold pass, rows, protocol) first, then ONE
-COMPACT final JSON line:
-  {"metric":"total_query_sec","value":N,"unit":"sec",
-   "queries":{name:sec,...},"sf":0.1}
-The final line is deliberately minimal: the driver that records
-BENCH_r{N}.json keeps only the last ~2000 characters of output and
-parses the JSON it finds there (rounds 2-3 shipped a single verbose
-line that outgrew that window -> "parsed": null). Two-decimal values
-+ compact separators keep 81 queries at ~1960 chars; the verbose
-record (3-decimal timings, cold pass, row counts) is the line above
-it and is also written to BENCH/last_run.json.
+Prints the full record (cold pass, rows, protocol) first, also written
+to BENCH/last_run.json, then the steady timings as compact JSON lines
+of at most 1900 characters each, every query at its measured 3-decimal
+time (-1.0 marks a failed query):
+  {"queries":{name:sec,...}}            (zero or more lines)
+  {"metric":"total_query_sec","value":N,"unit":"sec","sf":0.1,
+   "queries":{name:sec,...}}
+The headline comes last and carries as many of the last queries as fit
+on its line. A reader that keeps only the last 2000 characters of the
+output and parses its last line (the BENCH_r*.json recorder) sees the
+headline and about 80 of the 92 queries: 92 names at even 2-decimal times
+take ~2100 characters, so the whole map is only in the earlier lines
+and BENCH/last_run.json.
 """
 
 from __future__ import annotations
@@ -48,6 +50,27 @@ def _host_probe() -> dict | None:
         return mod.probe()
     except Exception:
         return None
+
+
+def _compact_lines(head: dict, timings: dict, limit: int = 1900) -> list[str]:
+    """``head`` plus ``timings`` as compact JSON lines of at most
+    ``limit`` chars, every query at its measured time. The last line is
+    ``head`` with a ``queries`` map of as many of the last queries as
+    fit; the lines before it hold the rest as ``{"queries":{...}}``."""
+
+    def dump(d: dict) -> str:
+        return json.dumps(d, separators=(",", ":"))
+
+    items = list(timings.items())
+    lines: list[str] = []
+    rec = head  # filled from the end: the last line is the fullest
+    while items or not lines:
+        i = max(len(items) - 1, 0)
+        while i > 0 and len(dump({**rec, "queries": dict(items[i - 1 :])})) <= limit:
+            i -= 1
+        lines.insert(0, dump({**rec, "queries": dict(items[i:])}))
+        items, rec = items[:i], {}
+    return lines
 
 
 def main() -> None:
@@ -146,37 +169,9 @@ def main() -> None:
     except OSError:
         pass
     spark.stop()  # before the final line: stop-time logs must not trail it
-    compact = {
-        "metric": "total_query_sec",
-        "value": total,
-        "unit": "sec",
-        # 1-decimal: 84+ queries at 2 decimals can exceed the ~2000-char
-        # tail window; full 3-decimal timings are in the verbose line
-        # above and BENCH/last_run.json
-        "queries": {k: round(v, 1) for k, v in timings.items()},
-        "sf": sf,
-    }
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # belt and braces: never outgrow the window
-        compact["queries"] = {k: int(round(v)) for k, v in timings.items()}
-        line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # still too big (very large suite): keep as
-        # many of the SLOWEST queries as fit (the signal a grader needs
-        # first); the count dropped is explicit, full detail lives in
-        # the verbose record and BENCH/last_run.json
-        by_cost = sorted(timings.items(), key=lambda kv: -kv[1])
-        kept: dict[str, int] = {}
-        for k, v in by_cost:
-            trial = dict(compact)
-            trial["queries"] = {**kept, k: int(round(v))}
-            trial["q_omitted"] = len(timings) - len(trial["queries"])
-            if len(json.dumps(trial, separators=(",", ":"))) > 1880:
-                break
-            kept[k] = int(round(v))
-        compact["queries"] = kept
-        compact["q_omitted"] = len(timings) - len(kept)
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line, flush=True)
+    head = {"metric": "total_query_sec", "value": total, "unit": "sec", "sf": sf}
+    for line in _compact_lines(head, timings):
+        print(line, flush=True)
 
 
 if __name__ == "__main__":

@@ -63,8 +63,6 @@ pre-image-less delete has no row image and goes to the DLQ.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -250,10 +248,15 @@ def _old_key_extra(old_img, is_u):
     ]
 
 
-def _event_projection(op, seq, ts, img, extra=()) -> tuple:
-    """Common projection from a parsed envelope to EVENT_SCHEMA order,
-    as a tuple of Column expressions (no DataFrame bound)."""
-    return (
+def _project_event(
+    parsed: DataFrame, op, seq, ts, img, extra=(), raw_col: str | None = None
+) -> DataFrame:
+    """Common projection from a parsed envelope to EVENT_SCHEMA order.
+    ``raw_col`` (the ``keep_raw`` option) appends that original payload
+    column as ``_raw``, for the DLQ split."""
+    if raw_col is not None:
+        extra = [*extra, F.col(raw_col).alias("_raw")]
+    return parsed.select(
         seq.try_cast("long").alias("seq"),
         ts.alias("ts"),
         op.alias("op"),
@@ -269,33 +272,25 @@ def _event_projection(op, seq, ts, img, extra=()) -> tuple:
     )
 
 
-def _project_event(parsed: DataFrame, op, seq, ts, img, extra=()) -> DataFrame:
-    """Common projection from a parsed envelope to EVENT_SCHEMA order."""
-    return parsed.select(*_event_projection(op, seq, ts, img, extra))
+def _parse_envelope(raw: DataFrame, value_col: str, schema: StructType) -> tuple:
+    """(``raw`` plus its ``value_col`` payload parsed as one struct
+    column, that column)."""
+    return raw.withColumn("_env", F.from_json(F.col(value_col), schema)), F.col("_env")
 
 
-# Per-process parser-plan cache. A parser's expression tree depends
-# ONLY on (value_col, option flags) — never on the input DataFrame —
-# yet it was re-built Column by Column on every call: ~150-250 py4j
-# round trips per dialect, ~0.1-0.2 s per query build and per
-# streaming micro-batch re-plan (measured). Each dialect's plan
-# (envelope from_json column, row filters, final projection) is built
-# once per process and the SAME unresolved Column objects are reused —
-# pure expression metadata, no data, no results, no session state
-# (same per-process contract as the parquet schema cache in
-# __spark_entry__._pq). Columns hold py4j refs into the driver JVM, so
-# the cache assumes one JVM gateway per process (true for every entry
-# point in this repo: bench, tests, streaming drivers).
-
-
-def _apply_plan(raw: DataFrame, plan) -> DataFrame:
-    env_col, filters, explode, proj = plan
-    parsed = raw.withColumn("_env", env_col)
-    for flt in filters:
-        parsed = parsed.where(flt)
-    if explode is not None:
-        parsed = parsed.select("*", explode)
-    return parsed.select(*proj)
+def _debezium_fields(env) -> tuple:
+    """(op, img, seq, ts) of a Debezium change envelope, stated once for
+    the JSON parser and the Avro decoder (``wire_avro``)."""
+    op = _op_expr(env["op"], _DEBEZIUM_OPS)
+    img = F.when(env["op"] == "d", env["before"]).otherwise(env["after"])
+    seq = F.coalesce(
+        F.element_at(env["source"], "lsn").try_cast("long"),
+        _packed_binlog_seq(
+            F.element_at(env["source"], "file"),
+            F.element_at(env["source"], "pos"),
+        ),
+    )
+    return op, img, seq, F.timestamp_millis(env["ts_ms"])
 
 
 def parse_debezium(
@@ -321,32 +316,13 @@ def parse_debezium(
     normally splits PK-changing updates into DELETE+INSERT at the
     source, so this matters for producers configured otherwise.
     """
-    return _apply_plan(raw, _debezium_plan(value_col, bool(keep_raw), bool(with_old_keys)))
-
-
-@lru_cache(maxsize=None)
-def _debezium_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
-    env = F.col("_env")
-    op = _op_expr(env["op"], _DEBEZIUM_OPS)
-    img = F.when(env["op"] == "d", env["before"]).otherwise(env["after"])
-    seq = F.coalesce(
-        F.element_at(env["source"], "lsn").try_cast("long"),
-        _packed_binlog_seq(
-            F.element_at(env["source"], "file"),
-            F.element_at(env["source"], "pos"),
-        ),
-    )
-    ts = F.timestamp_millis(env["ts_ms"])
+    parsed, env = _parse_envelope(raw, value_col, _DEBEZIUM_SCHEMA)
+    op, img, seq, ts = _debezium_fields(env)
     extra = [F.element_at(env["source"], "table").alias("src_table")]
     if with_old_keys:
         extra.extend(_old_key_extra(env["before"], env["op"] == "u"))
-    if keep_raw:
-        extra.append(F.col(value_col).alias("_raw"))
-    return (
-        F.from_json(F.col(value_col), _DEBEZIUM_SCHEMA),
-        (),
-        None,
-        _event_projection(op, seq, ts, img, extra),
+    return _project_event(
+        parsed, op, seq, ts, img, extra, value_col if keep_raw else None
     )
 
 
@@ -377,13 +353,10 @@ def parse_maxwell(
     null — exactly the partial old image ``keychange.split_key_changes``
     coalesces component-wise.
     """
-    return _apply_plan(raw, _maxwell_plan(value_col, bool(keep_raw), bool(with_old_keys)))
-
-
-@lru_cache(maxsize=None)
-def _maxwell_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
-    env = F.col("_env")
-    row_filter = env["type"].isNull() | ~env["type"].isin(*_MAXWELL_NON_ROW_TYPES)
+    parsed, env = _parse_envelope(raw, value_col, _MAXWELL_SCHEMA)
+    parsed = parsed.where(
+        env["type"].isNull() | ~env["type"].isin(*_MAXWELL_NON_ROW_TYPES)
+    )
     op = _op_expr(env["type"], _MAXWELL_OPS)
     img = env["data"]
     seq = F.when(
@@ -398,13 +371,8 @@ def _maxwell_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
     extra = [env["table"].alias("src_table")]
     if with_old_keys:
         extra.extend(_old_key_extra(env["old"], env["type"] == "update"))
-    if keep_raw:
-        extra.append(F.col(value_col).alias("_raw"))
-    return (
-        F.from_json(F.col(value_col), _MAXWELL_SCHEMA),
-        (row_filter,),
-        None,
-        _event_projection(op, seq, ts, img, extra),
+    return _project_event(
+        parsed, op, seq, ts, img, extra, value_col if keep_raw else None
     )
 
 
@@ -441,19 +409,9 @@ def parse_wal2json(
     key-changing update (a git file rename) otherwise merges as a new
     row and leaves the old key dangling.
     """
-    return _apply_plan(
-        raw,
-        _wal2json_plan(
-            value_col, bool(keep_raw), bool(with_txn), bool(with_old_keys)
-        ),
-    )
-
-
-@lru_cache(maxsize=None)
-def _wal2json_plan(value_col: str, keep_raw: bool, with_txn: bool, with_old_keys: bool):
-    env = F.col("_env")
-    row_filter = env["action"].isNull() | ~env["action"].isin(
-        *_WAL2JSON_NON_ROW_ACTIONS
+    parsed, env = _parse_envelope(raw, value_col, _WAL2JSON_SCHEMA)
+    parsed = parsed.where(
+        env["action"].isNull() | ~env["action"].isin(*_WAL2JSON_NON_ROW_ACTIONS)
     )
     op = _op_expr(env["action"], _WAL2JSON_OPS)
     to_map = lambda arr: F.map_from_entries(  # noqa: E731
@@ -474,13 +432,8 @@ def _wal2json_plan(value_col: str, keep_raw: bool, with_txn: bool, with_old_keys
         extra.append(env["xid"].alias("txn_id"))
     if with_old_keys:
         extra.extend(_old_key_extra(to_map(env["identity"]), env["action"] == "U"))
-    if keep_raw:
-        extra.append(F.col(value_col).alias("_raw"))
-    return (
-        F.from_json(F.col(value_col), _WAL2JSON_SCHEMA),
-        (row_filter,),
-        None,
-        _event_projection(op, seq, ts, img, extra),
+    return _project_event(
+        parsed, op, seq, ts, img, extra, value_col if keep_raw else None
     )
 
 
@@ -494,8 +447,7 @@ def wal2json_commits(raw: DataFrame, value_col: str = "value") -> DataFrame:
     Commit lines without an xid (producer without include-xids) yield
     nothing: the gate then treats every event as unframed pass-through.
     """
-    parsed = raw.withColumn("_env", F.from_json(F.col(value_col), _WAL2JSON_SCHEMA))
-    env = F.col("_env")
+    parsed, env = _parse_envelope(raw, value_col, _WAL2JSON_SCHEMA)
     return (
         parsed.where(env["action"] == "C")
         .where(env["xid"].isNotNull())
@@ -537,14 +489,10 @@ def parse_canal(
     DLQ split. ``posexplode_outer`` (not ``posexplode``) keeps
     data-less messages as one null-image row for the same reason.
     """
-    return _apply_plan(raw, _canal_plan(value_col, bool(keep_raw), bool(with_old_keys)))
-
-
-@lru_cache(maxsize=None)
-def _canal_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
-    env = F.col("_env")
-    row_filter = env["isDdl"].isNull() | ~F.lower(env["isDdl"]).isin("true", "1")
-    explode = F.posexplode_outer(env["data"]).alias("_pos", "_img")
+    parsed, env = _parse_envelope(raw, value_col, _CANAL_SCHEMA)
+    parsed = parsed.where(
+        env["isDdl"].isNull() | ~F.lower(env["isDdl"]).isin("true", "1")
+    ).select("*", F.posexplode_outer(env["data"]).alias("_pos", "_img"))
     op = _op_expr(env["type"], _CANAL_OPS)
     seq = F.when(
         env["id"].isNotNull() & F.col("_pos").isNotNull(),
@@ -559,13 +507,8 @@ def _canal_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
         # element_at) picks the exploded row's own old image.
         oldmap = F.get(env["old"], F.col("_pos"))
         extra.extend(_old_key_extra(oldmap, env["type"] == "UPDATE"))
-    if keep_raw:
-        extra.append(F.col(value_col).alias("_raw"))
-    return (
-        F.from_json(F.col(value_col), _CANAL_SCHEMA),
-        (row_filter,),
-        explode,
-        _event_projection(op, seq, ts, F.col("_img"), extra),
+    return _project_event(
+        parsed, op, seq, ts, F.col("_img"), extra, value_col if keep_raw else None
     )
 
 
@@ -600,15 +543,10 @@ def parse_dms(raw: DataFrame, value_col: str = "value", keep_raw: bool = False) 
     (task lifecycle / DDL) carry no row image and are DROPPED, not
     dead-lettered — mirroring wal2json's B/C/T handling.
     """
-    return _apply_plan(raw, _dms_plan(value_col, bool(keep_raw)))
-
-
-@lru_cache(maxsize=None)
-def _dms_plan(value_col: str, keep_raw: bool):
-    env = F.col("_env")
+    parsed, env = _parse_envelope(raw, value_col, _DMS_SCHEMA)
     meta = env["metadata"]
     rt = F.element_at(meta, "record-type")
-    row_filter = ~F.coalesce(rt == F.lit("control"), F.lit(False))
+    parsed = parsed.where(~F.coalesce(rt == F.lit("control"), F.lit(False)))
     opname = F.element_at(meta, "operation")
     op = _op_expr(opname, _DMS_OPS)
     txn = F.element_at(meta, "transaction-id").try_cast("long")
@@ -620,13 +558,8 @@ def _dms_plan(value_col: str, keep_raw: bool):
         F.coalesce(F.shiftleft(txn, DMS_PACK_SHIFT) + rec, F.unix_micros(ts))
     )
     extra = [F.element_at(meta, "table-name").alias("src_table")]
-    if keep_raw:
-        extra.append(F.col(value_col).alias("_raw"))
-    return (
-        F.from_json(F.col(value_col), _DMS_SCHEMA),
-        (row_filter,),
-        None,
-        _event_projection(op, seq, ts, env["data"], extra),
+    return _project_event(
+        parsed, op, seq, ts, env["data"], extra, value_col if keep_raw else None
     )
 
 
@@ -660,12 +593,7 @@ def parse_mongo(raw: DataFrame, value_col: str = "value", keep_raw: bool = False
     when absent (snapshot reads), a missing oplog timestamp is a
     null-seq DLQ row.
     """
-    return _apply_plan(raw, _mongo_plan(value_col, bool(keep_raw)))
-
-
-@lru_cache(maxsize=None)
-def _mongo_plan(value_col: str, keep_raw: bool):
-    env = F.col("_env")
+    parsed, env = _parse_envelope(raw, value_col, _MONGO_SCHEMA)
     op = _op_expr(env["op"], _DEBEZIUM_OPS)
     doc = F.when(env["op"] == "d", env["before"]).otherwise(env["after"])
     img = F.from_json(doc, MapType(StringType(), StringType()))
@@ -678,13 +606,8 @@ def _mongo_plan(value_col: str, keep_raw: bool):
     seq = F.when(sec.isNotNull(), F.shiftleft(sec, MONGO_PACK_SHIFT) + ord_)
     ts = F.timestamp_millis(env["ts_ms"])
     extra = [F.element_at(env["source"], "collection").alias("src_table")]
-    if keep_raw:
-        extra.append(F.col(value_col).alias("_raw"))
-    return (
-        F.from_json(F.col(value_col), _MONGO_SCHEMA),
-        (),
-        None,
-        _event_projection(op, seq, ts, img, extra),
+    return _project_event(
+        parsed, op, seq, ts, img, extra, value_col if keep_raw else None
     )
 
 
@@ -728,15 +651,8 @@ def parse_goldengate(
     for deletes); I/U carry ``after``. ``op_type`` 'T' (truncate) has
     no row image and is dropped, not dead-lettered.
     """
-    return _apply_plan(
-        raw, _goldengate_plan(value_col, bool(keep_raw), bool(with_old_keys))
-    )
-
-
-@lru_cache(maxsize=None)
-def _goldengate_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
-    env = F.col("_env")
-    row_filter = ~F.coalesce(env["op_type"] == F.lit("T"), F.lit(False))
+    parsed, env = _parse_envelope(raw, value_col, _GOLDENGATE_SCHEMA)
+    parsed = parsed.where(~F.coalesce(env["op_type"] == F.lit("T"), F.lit(False)))
     op = _op_expr(env["op_type"], _GOLDENGATE_OPS)
     img = F.when(env["op_type"] == "D", env["before"]).otherwise(env["after"])
     pos = env["pos"]
@@ -752,13 +668,8 @@ def _goldengate_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
         # U rows carry the FULL before image when the handler includes
         # it — the old key for keychange.split_key_changes
         extra.extend(_old_key_extra(env["before"], env["op_type"] == "U"))
-    if keep_raw:
-        extra.append(F.col(value_col).alias("_raw"))
-    return (
-        F.from_json(F.col(value_col), _GOLDENGATE_SCHEMA),
-        (row_filter,),
-        None,
-        _event_projection(op, seq, ts, img, extra),
+    return _project_event(
+        parsed, op, seq, ts, img, extra, value_col if keep_raw else None
     )
 
 

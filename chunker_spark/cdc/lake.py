@@ -18,8 +18,12 @@ Iceberg v2 (data files + positional semantics kept logical):
   replaced by one resolved file. Tombstones are retained through
   compaction so late/reordered batches with older seqs stay harmless.
 * **Atomic commits.** One JSON manifest per commit listing
-  {bucket -> files}, written tmp-then-``os.rename``; the latest commit
-  defines the table; older commits stay readable (time-travel-lite).
+  {bucket -> files}, written to a tmp file and published with
+  ``os.link`` (create-if-absent: a second writer of the same commit
+  number fails loudly, and since every write attempt puts its data
+  files in a directory of its own, it leaves the winner's files
+  intact); the latest commit defines the table; older commits stay
+  readable (time-travel-lite).
 * **Exactly-once.** Every commit records its ``batch_id``; re-delivery
   of a committed micro-batch is detected and becomes a no-op. Files
   written by a crashed attempt are unreferenced and harmless.
@@ -128,6 +132,11 @@ class LakeTable:
         10⁶-batch regime would otherwise rewrite a multi-MB ledger into
         every commit. Spilled chunks are immutable, so they are read
         once per process and cached."""
+        if "://" in root:
+            # commits, ledger chunks and file listings go through os.*
+            # on ``root``: a URI would put them in a local directory
+            # named after it while Spark writes the data to the store
+            raise ValueError(f"LakeTable: root must be a local path, got {root!r}")
         self.spark = spark
         self.root = root.rstrip("/")
         self.num_buckets = num_buckets
@@ -213,7 +222,18 @@ class LakeTable:
             json.dump(commit, f)
             f.flush()
             os.fsync(f.fileno())
-        os.rename(tmp, final)  # atomic commit point
+        # atomic commit point, create-if-absent: a second writer that
+        # read the same prior commit gets FileExistsError instead of
+        # silently replacing (and so dropping) the first one's commit
+        try:
+            os.link(tmp, final)
+        finally:
+            os.unlink(tmp)
+        fd = os.open(meta, os.O_RDONLY)
+        try:
+            os.fsync(fd)  # make the new directory entry durable
+        finally:
+            os.close(fd)
 
     # ---- reads -----------------------------------------------------
 
@@ -378,7 +398,11 @@ class LakeTable:
     def _write_snap(
         self, rows: DataFrame, seq: int, tag: str, prepartitioned: bool = False
     ) -> dict[str, list[str]]:
-        snap_dir = f"{self.root}/data/snap-{seq:012d}-{tag}"
+        # one directory per write attempt: a second writer of the same
+        # seq, or the retry of a crashed one, never overwrites files a
+        # published commit may list (the loser of the commit publish
+        # leaves an orphan dir for vacuum_orphans)
+        snap_dir = f"{self.root}/data/snap-{seq:012d}-{tag}-{uuid.uuid4().hex}"
         out = rows.withColumn("__bucket", bucket_expr(self.num_buckets))
         # cluster rows by key within each file: repeated repo/path values
         # RLE-compress, the resolve groupBy's map-side combine sees each
@@ -404,7 +428,7 @@ class LakeTable:
             out = out.repartition("__bucket")
         out.sortWithinPartitions(
             "__bucket", "repo", "path", "seq"
-        ).write.partitionBy("__bucket").mode("overwrite").parquet(snap_dir)
+        ).write.partitionBy("__bucket").parquet(snap_dir)
         files: dict[str, list[str]] = {}
         for d in os.listdir(snap_dir):
             if d.startswith("__bucket="):
@@ -422,17 +446,20 @@ class LakeTable:
         """Carry the exactly-once batch-id ledger into the next commit:
         extend the recent tail with ``batch_id`` and spill it to an
         immutable side chunk once it exceeds ``ledger_spill_threshold``
-        (a crash between the chunk write and the commit rename is
-        harmless — a retry rewrites the same deterministic content via
-        tmp + rename). Returns (tail, ledger_files)."""
+        (a crash between the chunk write and the commit publish, or a
+        second writer that loses the commit publish, leaves only an
+        unreferenced chunk: each chunk name is unique, so no writer
+        replaces a chunk another commit references). Returns (tail,
+        ledger_files)."""
         prev_tail = set(prev.get("batch_ids", [])) if prev else set()
         ledger_files = list(prev.get("ledger_files", [])) if prev else []
         if prev and "batch_ids" not in prev:  # pre-ledger log: rebuild once
             prev_tail = self.committed_batch_ids()
         tail = sorted(prev_tail | {str(batch_id)})
         if len(tail) > self.ledger_spill_threshold:
-            chunk_name = f"ledger-{seq:012d}.json"
-            tmp = f"{self.root}/meta/.tmp-ledger-{uuid.uuid4().hex}.json"
+            token = uuid.uuid4().hex
+            chunk_name = f"ledger-{seq:012d}-{token}.json"
+            tmp = f"{self.root}/meta/.tmp-ledger-{token}.json"
             with open(tmp, "w") as f:
                 json.dump({"batch_ids": tail}, f)
                 f.flush()
@@ -463,7 +490,7 @@ class LakeTable:
 
         ``stats_fn``: optional ``callable(touched_buckets, new_files)
         -> dict`` invoked right after the delta files land and BEFORE
-        the commit JSON is renamed into place — so an Observation attached to
+        the commit JSON is published — so an Observation attached to
         ``delta_rows`` has resolved, and ``current_commit()`` still
         names the PRIOR state (lineage joins against old state read
         consistently). Its result is merged over ``stats``."""
@@ -557,7 +584,7 @@ class LakeTable:
         (their file maps are keyed by THEIR OWN num_buckets; full reads
         resolve identically, only bucket-pruned reads are
         layout-specific). Crash-safe like every write: data files land
-        first, the commit JSON rename is the atomic point; a crash
+        first, the commit JSON publish is the atomic point; a crash
         in between leaves an orphan snap dir for vacuum_orphans().
         Single-writer op, like compaction.
 
@@ -575,7 +602,7 @@ class LakeTable:
             )
         old_n = self.num_buckets
         self.num_buckets = new_num_buckets  # _write_snap hashes with it
-        # the restore scope runs through the commit rename: until
+        # the restore scope runs through the commit publish: until
         # _write_commit succeeds the committed layout is still old_n,
         # and an instance left on the new count after e.g. an ENOSPC in
         # the ledger-carry write would hash subsequent deltas with a
@@ -653,7 +680,8 @@ class LakeTable:
     def vacuum_orphans(self) -> dict:
         """Remove snapshot directories referenced by NO commit — the
         debris of a writer that crashed after ``_write_snap`` but before
-        ``_write_commit`` (expire_commits won't touch these: it only
+        ``_write_commit``, or lost the commit publish to another writer
+        (expire_commits won't touch these: it only
         deletes parquet unreferenced by *retained* commits, and leaves
         the _SUCCESS/crc debris behind). Single-writer maintenance op:
         must not run concurrently with an in-flight append, whose

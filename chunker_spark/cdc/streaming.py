@@ -27,14 +27,14 @@ from .merge import apply_batch
 def _append_metrics(lake: LakeTable, commit: dict, batch_id: int) -> None:
     """Append one (batch, bucket) lineage row set under <lake>/metrics.
 
-    Written DRIVER-SIDE with pyarrow when the lake root is a local
-    path: the payload is <= num_buckets tiny rows, and a distributed
+    Written DRIVER-SIDE with pyarrow, on the local path the lake itself
+    lives on: the payload is <= num_buckets tiny rows, and a distributed
     write job for it costs a full job-launch round trip per batch
-    (measured 0.6-5 s on this host depending on regime — it was ~40%
-    of q_cdc_lineage, VERDICT r4 "What's wrong" #1). Non-local roots
-    (s3://, hdfs://) fall back to the Spark writer, which is also the
-    right choice there (committer semantics, credentials)."""
-    spark = lake.spark
+    (measured 0.6-5 s depending on regime — it was ~40% of
+    q_cdc_lineage, VERDICT r4 "What's wrong" #1)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     stats = commit.get("stats", {})
     per_bucket = stats.get("keys_per_bucket", {}) or {"-1": 0}
     rows = [
@@ -56,44 +56,29 @@ def _append_metrics(lake: LakeTable, commit: dict, batch_id: int) -> None:
         "upsert_rows", "upsert_bytes", "upsert_chunks",
         "reused_chunks", "delete_rows",
     ]
-    root = str(lake.root)
-    scheme = root.split("://", 1)[0] if "://" in root else ""
-    if scheme in ("", "file"):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        path = root.split("://", 1)[-1]
-        os.makedirs(f"{path}/metrics", exist_ok=True)
-        table = pa.table(
-            {n: list(col) for n, col in zip(names, zip(*rows))},
-            schema=pa.schema(
-                [
-                    ("commit_seq", pa.int64()),
-                    ("batch_id", pa.string()),
-                    ("bucket", pa.int32()),
-                    ("bucket_keys", pa.int32()),
-                    ("upsert_rows", pa.int64()),
-                    ("upsert_bytes", pa.int64()),
-                    ("upsert_chunks", pa.int64()),
-                    ("reused_chunks", pa.int64()),
-                    ("delete_rows", pa.int64()),
-                ]
-            ),
-        )
-        # commit_seq is unique per commit; tmp+rename keeps concurrent
-        # readers from seeing a half-written file
-        final = f"{path}/metrics/part-{int(commit['commit_seq']):08d}.parquet"
-        tmp = f"{final}.{os.getpid()}.tmp"
-        pq.write_table(table, tmp)
-        os.replace(tmp, final)
-        return
-    df = spark.createDataFrame(
-        rows,
-        "commit_seq long, batch_id string, bucket int, bucket_keys int, "
-        "upsert_rows long, upsert_bytes long, upsert_chunks long, "
-        "reused_chunks long, delete_rows long",
+    os.makedirs(f"{lake.root}/metrics", exist_ok=True)
+    table = pa.table(
+        {n: list(col) for n, col in zip(names, zip(*rows))},
+        schema=pa.schema(
+            [
+                ("commit_seq", pa.int64()),
+                ("batch_id", pa.string()),
+                ("bucket", pa.int32()),
+                ("bucket_keys", pa.int32()),
+                ("upsert_rows", pa.int64()),
+                ("upsert_bytes", pa.int64()),
+                ("upsert_chunks", pa.int64()),
+                ("reused_chunks", pa.int64()),
+                ("delete_rows", pa.int64()),
+            ]
+        ),
     )
-    df.coalesce(1).write.mode("append").parquet(f"{lake.root}/metrics")
+    # commit_seq is unique per commit; tmp+rename keeps concurrent
+    # readers from seeing a half-written file
+    final = f"{lake.root}/metrics/part-{int(commit['commit_seq']):08d}.parquet"
+    tmp = f"{final}.{os.getpid()}.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, final)
 
 
 class IngestStream:

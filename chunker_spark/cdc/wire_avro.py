@@ -146,8 +146,9 @@ def decode_confluent(
     spark-avro jar is present.  With the jar, the plan is
     split (map-only) -> ``from_avro`` (JVM deserializer, mode
     PERMISSIVE so undecodable payloads null out rather than kill the
-    batch) -> the same ``_project_event`` projection the JSON path
-    uses, so both wire formats are bit-identical downstream.
+    batch) -> the same ``_debezium_fields`` and ``_project_event``
+    projection the JSON path uses, so both wire formats are
+    bit-identical downstream.
     """
     if not avro_available(spark):
         raise RuntimeError(
@@ -156,23 +157,14 @@ def decode_confluent(
         )
     from pyspark.sql.avro.functions import from_avro
 
-    from .envelopes import _DEBEZIUM_OPS, _op_expr, _packed_binlog_seq, _project_event
+    from .envelopes import _debezium_fields, _project_event
 
     framed = confluent_split(df, value_col)
     parsed = framed.withColumn(
         "_env", from_avro(F.col("payload"), avro_schema, {"mode": "PERMISSIVE"})
     )
     env = F.col("_env")
-    op = _op_expr(env["op"], _DEBEZIUM_OPS)
-    img = F.when(env["op"] == "d", env["before"]).otherwise(env["after"])
-    seq = F.coalesce(
-        F.element_at(env["source"], "lsn").try_cast("long"),
-        _packed_binlog_seq(
-            F.element_at(env["source"], "file"),
-            F.element_at(env["source"], "pos"),
-        ),
-    )
-    ts = F.timestamp_millis(env["ts_ms"])
+    op, img, seq, ts = _debezium_fields(env)
     extra = [
         F.col("frame_ok"),
         F.col("schema_id"),

@@ -389,30 +389,17 @@ def simhash_expr(text_col, bits: int = 64) -> F.Column:
     DOCUMENT and was measured ~2× faster at 5k docs. Same values
     bit-for-bit (known-answer tests pin them).
     """
-    if isinstance(text_col, str) and text_col.isidentifier():
-        # fast path (plan-construction cost, not execution): the whole
-        # expression as ONE SQL string — a single py4j round trip
-        # instead of ~2*bits literal/cast calls plus the HOF lambdas
-        # (~0.2 s per 3-hash query build, measured). Identical
-        # semantics: same masks, same per-bit majority, same XOR fold.
-        mask_sql = ",".join(
+    if isinstance(text_col, str):
+        text_col = F.col(text_col)
+    # one SQL literal for the whole mask array: a single py4j call
+    # instead of a lit + cast pair per bit
+    masks = F.expr(
+        "array("
+        + ",".join(
             f"CAST('{(1 << i) if i < 63 else -(1 << 63)}' AS BIGINT)"
             for i in range(bits)
         )
-        hashes_sql = (
-            "transform(filter(split(lower(`" + text_col + "`), '\\\\W+'),"
-            " w -> w != ''), w -> xxhash64(w))"
-        )
-        return F.expr(
-            "aggregate(transform(array(" + mask_sql + "), m -> "
-            f"CASE WHEN size(filter({hashes_sql}, h -> (h & m) != 0)) * 2"
-            f" > size({hashes_sql}) THEN m ELSE CAST(0 AS BIGINT) END), "
-            "CAST(0 AS BIGINT), (acc, v) -> acc ^ v)"
-        )
-    if isinstance(text_col, str):
-        text_col = F.col(text_col)
-    masks = F.array(
-        *[F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long") for i in range(bits)]
+        + ")"
     )
     words = F.filter(F.split(F.lower(text_col), r"\W+"), lambda w: w != "")
     hashes = F.transform(words, lambda w: F.xxhash64(w))

@@ -46,6 +46,13 @@ def tfidf_top_terms(
 
     Returns (group_col, rank, term, total_tf, doc_freq, score) with
     score = total_tf * ln((N_docs+1)/(doc_freq+1)), rounded to 4.
+
+    Precondition: each ``id_col`` value has exactly one ``group_col``
+    value across the rows of ``df``. ``doc_freq`` is the sum of
+    per-group distinct-document counts, so a document spread over
+    several groups is counted once per group and ``doc_freq`` is
+    overstated. Nothing checks this at run time: a check would cost an
+    extra Spark action.
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")

@@ -585,6 +585,49 @@ def test_point_lookup_prunes_files_by_footer_stats(spark, tmp_path):
     assert lake.lookup("zzz-no-such-repo", "nope").count() == 0
 
 
+def test_second_writer_of_a_commit_seq_fails_loudly(spark, tmp_path):
+    """Two writers that read the same prior commit both write commit_seq
+    1: the second publish raises instead of replacing the first writer's
+    commit, and the second writer's data and ledger writes leave the
+    first writer's files alone, so the table still reads back exactly
+    the first writer's batches."""
+    import os
+
+    events = list(gen_events_local(SPEC, 150))
+    root = str(tmp_path / "lake")
+    # thresholds of 1: both writers write delta and compact dirs and
+    # spill a ledger chunk for commit_seq 1
+    first, second = (
+        LakeTable(spark, root, num_buckets=4, compact_threshold=1, ledger_spill_threshold=1)
+        for _ in range(2)
+    )
+    apply_batch(first, _events_df(spark, events[:50]), "x", params=PARAMS)
+    prev = first.current_commit()
+    apply_batch(first, _events_df(spark, events[50:100]), "A", params=PARAMS)
+    assert first.current_commit()["compacted_buckets"]
+    second.current_commit = lambda: prev  # read before A was published
+    with pytest.raises(FileExistsError):
+        apply_batch(second, _events_df(spark, events[100:150]), "B", params=PARAMS)
+
+    cold = LakeTable(spark, root)
+    assert cold.current_commit()["batch_id"] == "A"
+    assert cold.committed_batch_ids() == {"x", "A"}
+    assert not [n for n in os.listdir(f"{root}/meta") if n.startswith(".tmp")]
+    assert cold.vacuum_orphans()["removed_dirs"]  # the second writer's dirs
+    _assert_state_equals_oracle(spark, cold, events[:100])
+
+
+def test_lake_rejects_uri_root(tmp_path, monkeypatch):
+    """Commits and ledger chunks are written with os calls on the root,
+    so a URI root is refused before anything lands on the local disk."""
+    import os
+
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local path"):
+        LakeTable(None, "s3://bucket/tbl")
+    assert os.listdir(tmp_path) == []
+
+
 def test_vacuum_orphans_removes_crash_debris_only(spark, tmp_path):
     import os
 
